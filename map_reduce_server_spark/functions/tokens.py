@@ -45,7 +45,8 @@ def distinct_ratio_col() -> Column:
     the ratio of identically-computed integers is bit-identical on
     both engines, while round(x, 6) breaks on non-dyadic 7-decimal
     midpoints (41/640 rounds to ...63 in Spark, ...62 in DuckDB —
-    the confirmed-live class _CHANGED_R7 documents)."""
+    the confirmed-live class the round-7 raw-double rework
+    removed)."""
     toks = word_tokens_col()
     return F.size(F.array_distinct(toks)).cast("double") / F.greatest(
         F.size(toks), F.lit(1)

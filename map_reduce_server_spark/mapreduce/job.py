@@ -51,6 +51,17 @@ from pyspark.sql import SparkSession
 
 from map_reduce_server_spark.io.sinks import write_numbered_text
 
+# The map, group and reduce closures below run on Python workers that
+# may not have this repo on sys.path (a session started from another
+# cwd) — ship this module's functions by value (see
+# functions.register_by_value).
+from map_reduce_server_spark.functions import (  # noqa: E402
+    register_by_value as _rbv,
+)
+
+_rbv(__name__)
+del _rbv  # a lingering ref would pickle the functions pkg by reference
+
 
 @dataclass(frozen=True)
 class MapReduceJob:
@@ -326,12 +337,15 @@ def run_job(spark: SparkSession, job: MapReduceJob) -> list[str]:
     # error instead of a bare UnicodeDecodeError inside a task — the
     # reference copies raw reducer files so it has no such boundary;
     # a binary-output job needs a binary sink, not silent mangling.
+    # capture the string, not the job: its class would ship by value
+    reducer = job.reducer_executable
+
     def _to_text_row(line: bytes):
         try:
             return (line.decode("utf-8"),)
         except UnicodeDecodeError as exc:
             raise ValueError(
-                f"reducer `{job.reducer_executable}' emitted a "
+                f"reducer `{reducer}' emitted a "
                 f"non-UTF-8 output line ({line[:40]!r}...); the text "
                 f"sink stores UTF-8 text — route binary output to a "
                 f"binary sink instead"

@@ -2325,10 +2325,10 @@ def q_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_bloom_prefilter_join below (round-14
-# registration queue): the bloom filter is INVISIBLE to the result —
-# a probabilistic prefilter may only discard rows the exact join
-# would discard anyway, so the oracle is the plain semi-join.
+# Oracle for q_bloom_prefilter_join below: the bloom filter is
+# INVISIBLE to the result — a probabilistic prefilter may only
+# discard rows the exact join would discard anyway, so the oracle is
+# the plain semi-join.
 _BLOOM_ORACLE = f"""
 SELECT l_returnflag,
        COUNT(*) AS n_lines,
@@ -2520,10 +2520,10 @@ def q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_hll_sketch_rollup below (round-16
-# registration queue): sketch bytes are engine-specific, so the
-# verifiable claims are the exact reference counts plus the literal
-# bound booleans (the q_approx_sketches pattern).
+# Oracle for q_hll_sketch_rollup below: sketch bytes are
+# engine-specific, so the verifiable claims are the exact reference
+# counts plus the literal bound booleans (the q_approx_sketches
+# pattern).
 _HLL_ROLLUP_ORACLE = """
 SELECT CAST(n.n_regionkey AS INTEGER) AS region_key,
        CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS exact_customers,
@@ -2537,6 +2537,7 @@ _HLL_LGK = 14
 _HLL_RSD = 1.04 / (2 ** (_HLL_LGK / 2))
 
 
+@register("q_hll_sketch_rollup", oracle=_HLL_ROLLUP_ORACLE)
 def q_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE-sketch rollup — the pattern behind every layered
     OLAP cube at 100 TB: per-nation DataSketches HLL sketches of the
@@ -2585,8 +2586,7 @@ def q_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_merge_intervals below (round-17
-# registration queue). The sweep is the standard
+# Oracle for q_merge_intervals below. The sweep is the standard
 # running-max-of-prior-ends island cut; the window ORDER BY ends in
 # the unique event_id, so prefix state is engine-independent even
 # under duplicate timestamps, and every duration is integer
@@ -2625,6 +2625,7 @@ FROM runs GROUP BY user_id
 """
 
 
+@register("q_merge_intervals", oracle=_MERGE_IV_ORACLE)
 def q_merge_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval coalescing: each event opens a 5-minute activity
     interval; overlapping or touching intervals per user merge into
@@ -2687,11 +2688,10 @@ def q_merge_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_cumulative_distinct_users below
-# (round-18 registration queue). Days are epoch-day integers (the
-# q_gap_islands recipe — no calendar/timezone surface at all), and
-# the cumulative series derives from FIRST OCCURRENCES, never from
-# a running COUNT(DISTINCT) over an expanding frame.
+# Oracle for q_cumulative_distinct_users below. Days are epoch-day
+# integers (the q_gap_islands recipe — no calendar/timezone surface
+# at all), and the cumulative series derives from FIRST OCCURRENCES,
+# never from a running COUNT(DISTINCT) over an expanding frame.
 _CUMDIST_ORACLE = """
 WITH e AS (
   SELECT user_id, epoch_us(ts) // 86400000000 AS d
@@ -2710,6 +2710,7 @@ FROM daily LEFT JOIN news ON daily.d = news.d
 """
 
 
+@register("q_cumulative_distinct_users", oracle=_CUMDIST_ORACLE)
 def q_cumulative_distinct_users(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2759,10 +2760,10 @@ def q_cumulative_distinct_users(
 
 _MV_CUTOFF = "1997-01-01"
 
-# Oracle for the UNREGISTERED q_incremental_mv_merge below
-# (round-18 registration queue): the merged partials must equal a
-# PLAIN FULL RECOMPUTE — incremental maintenance is result-invisible
-# by definition, so the oracle never sees the cutoff.
+# Oracle for q_incremental_mv_merge below: the merged partials must
+# equal a PLAIN FULL RECOMPUTE — incremental maintenance is
+# result-invisible by definition, so the oracle never sees the
+# cutoff.
 _MV_MERGE_ORACLE = """
 SELECT o_custkey AS custkey,
        COUNT(*) AS n_orders,
@@ -2773,6 +2774,7 @@ FROM orders GROUP BY 1
 """
 
 
+@register("q_incremental_mv_merge", oracle=_MV_MERGE_ORACLE)
 def q_incremental_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance: a per-customer
     revenue rollup maintained as BASE partials (orders before
@@ -2843,12 +2845,11 @@ _SEQ_TYPES = [
     ("error", "e"),
 ]
 
-# Oracle for the UNREGISTERED q_sequence_mining below (round-18
-# registration queue). Same path-string compaction as q_funnel
-# (list ORDER BY ts, event_id — unique tie-break), candidate
-# triples from a VALUES cross product, containment via the portable
-# `a.*b.*c` subsequence regex (matching is in the portable envelope;
-# only replacement semantics diverge across engines).
+# Oracle for q_sequence_mining below. Same path-string compaction as
+# q_funnel (list ORDER BY ts, event_id — unique tie-break),
+# candidate triples from a VALUES cross product, containment via the
+# portable `a.*b.*c` subsequence regex (matching is in the portable
+# envelope; only replacement semantics diverge across engines).
 _SEQ_MINING_ORACLE = """
 WITH ch AS (
   SELECT user_id, ts, event_id,
@@ -2872,6 +2873,7 @@ GROUP BY t1, t2, t3
 """
 
 
+@register("q_sequence_mining", oracle=_SEQ_MINING_ORACLE)
 def q_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-pattern mining, order-3: for every ordered triple
     of event types, how many users exhibit it as a TIME-ORDERED
@@ -2936,13 +2938,12 @@ def q_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RZ_W = 7  # trailing window length (days), current day included
 
-# Oracle for the UNREGISTERED q_rolling_zscore below (round-18
-# registration queue). Day totals are exact decimal sums; their
-# squares are double-multiplied (identical IEEE op) then
+# Oracle for q_rolling_zscore below. Day totals are exact decimal
+# sums; their squares are double-multiplied (identical IEEE op) then
 # decimal-cast BEFORE the window sum, so both frame sums are exact
 # and order-independent; mean/variance/z are then arithmetic on
-# identical doubles, with the shared 6-digit round absorbing
-# nothing but display width.
+# identical doubles, with the shared 6-digit round absorbing nothing
+# but display width.
 _ROLLING_Z_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, epoch_us(ts) // 86400000000 AS day_num,
@@ -2969,6 +2970,7 @@ WHERE n = {_RZ_W}
 """
 
 
+@register("q_rolling_zscore", oracle=_ROLLING_Z_ORACLE)
 def q_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomaly detection: each day's revenue per
     event type scored against the trailing 7-day (_RZ_W) window's mean

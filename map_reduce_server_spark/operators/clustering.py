@@ -942,10 +942,9 @@ def graph_connected_components(
 
 _JACC_MIN_COMMON = 1  # emit pairs sharing at least one neighbor
 
-# Oracle for the UNREGISTERED graph_jaccard_neighbors below
-# (round-16 registration queue): same wedge enumeration + degree
-# marginals in SQL; round(…, 9) under the repo's libm/division
-# portability contract.
+# Oracle for graph_jaccard_neighbors below: same wedge enumeration +
+# degree marginals in SQL; round(…, 9) under the repo's
+# libm/division portability contract.
 _JACC_NEIGHBORS_ORACLE = f"""
 WITH e AS (
   SELECT a.l_partkey AS u, b.l_partkey AS v
@@ -967,6 +966,7 @@ FROM common c JOIN deg da ON da.node = c.a JOIN deg db ON db.node = c.b
 """
 
 
+@register("graph_jaccard_neighbors", oracle=_JACC_NEIGHBORS_ORACLE)
 def graph_jaccard_neighbors(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1022,15 +1022,14 @@ def graph_jaccard_neighbors(
     )
 
 
-# Oracle for the UNREGISTERED graph_shortest_paths below (round-17
-# registration queue). Phase 1 is the exact hops recursion of
-# graph_bfs_hops; phase 2 derives each node's UNIQUE min-parent (the
-# smallest BFS predecessor one hop closer to the seed) and walks the
-# parent chain per node — a LINEAR recursion of total size
-# O(V x diameter), never a path enumeration (enumerating all
-# shortest paths is exponential on dense graphs; the min-parent tree
-# makes the reported path deterministic and both engines derive it
-# from the same hops table).
+# Oracle for graph_shortest_paths below. Phase 1 is the exact hops
+# recursion of graph_bfs_hops; phase 2 derives each node's UNIQUE
+# min-parent (the smallest BFS predecessor one hop closer to the
+# seed) and walks the parent chain per node — a LINEAR recursion of
+# total size O(V x diameter), never a path enumeration (enumerating
+# all shortest paths is exponential on dense graphs; the min-parent
+# tree makes the reported path deterministic and both engines derive
+# it from the same hops table).
 _SP_ORACLE = f"""
 WITH RECURSIVE e AS (
   SELECT a.l_partkey AS u, b.l_partkey AS v
@@ -1069,6 +1068,7 @@ JOIN seed ON c.cur = seed.s
 """
 
 
+@register("graph_shortest_paths", oracle=_SP_ORACLE)
 def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source shortest paths WITH path reconstruction: every
     part reachable within ``_BFS_MAX_HOPS`` of the seed, labeled with
@@ -1251,6 +1251,7 @@ def k_core(edges: DataFrame, k: int, max_iter: int) -> DataFrame:
     )
 
 
+@register("graph_k_core", oracle=_KCORE_ORACLE)
 def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition (fixed k = 2) of the thresholded
     co-purchase graph: the maximal subgraph where every surviving

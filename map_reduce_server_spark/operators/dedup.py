@@ -926,7 +926,8 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integers is bit-identical on both engines, while round(x, 6)
     # breaks on non-dyadic 7-decimal midpoints (e.g. 321/640 —
     # Spark HALF_UP on the shortest repr vs DuckDB on the binary
-    # value), the confirmed-live class _CHANGED_R7 documents.
+    # value), the confirmed-live class the round-7 raw-double rework
+    # removed.
     return (
         _verified_common(cand, darr)
         .filter(j >= _PJ_THRESHOLD)

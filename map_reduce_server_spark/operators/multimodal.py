@@ -1873,10 +1873,10 @@ def tiff_stats(df: DataFrame) -> DataFrame:
     return _px_stats_stage(df, tiff.decode_gray8)
 
 
-# Oracle for the UNREGISTERED multimodal_decode_tiff below (round-14
-# registration queue): identical pixel statistics recomputed from
-# the md5 hex — 48 bytes, so the divisor joins the tie-free-by-
-# enumeration set in test_mean_px_round_tie_free_domains.
+# Oracle for multimodal_decode_tiff below: identical pixel
+# statistics recomputed from the md5 hex — 48 bytes, so the divisor
+# joins the tie-free-by-enumeration set in
+# test_mean_px_round_tie_free_domains.
 _TIFF_ORACLE = f"""
 WITH px AS (
   SELECT doc_id, list_transform(range(1, 49),
@@ -1954,10 +1954,9 @@ def bmp_stats(df: DataFrame) -> DataFrame:
     return _px_stats_stage(df, bmp.decode_gray8)
 
 
-# Oracle for the UNREGISTERED multimodal_decode_bmp below (round-14
-# registration queue): identical pixel statistics recomputed from
-# the md5 hex (same 48-byte pixel source as TIFF, so divisor 48 is
-# already in the tie-free-by-enumeration proof).
+# Oracle for multimodal_decode_bmp below: identical pixel statistics
+# recomputed from the md5 hex (same 48-byte pixel source as TIFF, so
+# divisor 48 is already in the tie-free-by-enumeration proof).
 _BMP_ORACLE = f"""
 WITH px AS (
   SELECT doc_id, list_transform(range(1, 49),
@@ -2257,10 +2256,9 @@ def ico_stats(df: DataFrame) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED multimodal_decode_ico below (round-16
-# registration queue): entry-0 pixel statistics recomputed from the
-# md5 hex (48-byte source, divisor already tie-free by enumeration)
-# plus the constant directory count.
+# Oracle for multimodal_decode_ico below: entry-0 pixel statistics
+# recomputed from the md5 hex (48-byte source, divisor already
+# tie-free by enumeration) plus the constant directory count.
 _ICO_ORACLE = f"""
 WITH px AS (
   SELECT doc_id, list_transform(range(1, 49),
@@ -2280,6 +2278,7 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 """
 
 
+@register("multimodal_decode_ico", oracle=_ICO_ORACLE)
 def multimodal_decode_ico(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the MULTI-IMAGE DIRECTORY container
     family: encode each document's md5-derived rasters as an actual
@@ -2350,11 +2349,10 @@ def pcx_stats(df: DataFrame) -> DataFrame:
     return _px_stats_stage(df, pcx.decode_gray8)
 
 
-# Oracle for the UNREGISTERED multimodal_decode_pcx below (round-17
-# registration queue): identical pixel statistics recomputed from
-# the md5 hex (48-byte pixel source, divisor already in the
-# tie-free-by-enumeration proof of _px_stats_select; the pad bytes
-# are decode-invisible by the truncation contract).
+# Oracle for multimodal_decode_pcx below: identical pixel statistics
+# recomputed from the md5 hex (48-byte pixel source, divisor already
+# in the tie-free-by-enumeration proof of _px_stats_select; the pad
+# bytes are decode-invisible by the truncation contract).
 _PCX_ORACLE = f"""
 WITH px AS (
   SELECT doc_id, list_transform(range(1, 49),
@@ -2372,6 +2370,7 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 """
 
 
+@register("multimodal_decode_pcx", oracle=_PCX_ORACLE)
 def multimodal_decode_pcx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the TWO-BIT-TAGGED RLE family:
     encode each document's md5-derived pixels as an actual ZSoft PCX
@@ -2432,11 +2431,10 @@ def pgm_stats(df: DataFrame) -> DataFrame:
     return _px_stats_stage(df, pgm.decode_gray8)
 
 
-# Oracle for the UNREGISTERED multimodal_decode_pgm below (round-18
-# registration queue): identical pixel statistics recomputed from
-# the md5 hex (48-byte pixel source, divisor already in the
-# tie-free-by-enumeration proof of _px_stats_select; P5 vs P2 is
-# decode-invisible by construction).
+# Oracle for multimodal_decode_pgm below: identical pixel statistics
+# recomputed from the md5 hex (48-byte pixel source, divisor already
+# in the tie-free-by-enumeration proof of _px_stats_select; P5 vs P2
+# is decode-invisible by construction).
 _PGM_ORACLE = f"""
 WITH px AS (
   SELECT doc_id, list_transform(range(1, 49),
@@ -2454,6 +2452,7 @@ FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
 """
 
 
+@register("multimodal_decode_pgm", oracle=_PGM_ORACLE)
 def multimodal_decode_pgm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec round-trip for the ASCII-HEADER container family:
     encode each document's md5-derived pixels as an actual netpbm

@@ -1216,10 +1216,10 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_window_time_range below (round-14
-# registration queue): calendar-INTERVAL range frame, value-based so
-# equal timestamps land in each other's frames regardless of order —
-# deterministic without a unique tie-break, unlike ROWS frames.
+# Oracle for q_window_time_range below: calendar-INTERVAL range
+# frame, value-based so equal timestamps land in each other's frames
+# regardless of order — deterministic without a unique tie-break,
+# unlike ROWS frames.
 _TIME_RANGE_ORACLE = """
 SELECT event_id, user_id, ts,
        COUNT(*) OVER w AS n_trailing_30m,

@@ -336,10 +336,15 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved A/B, identical output). inheritable_thread_target
     # keeps job-group/description/tag thread-locals correct per the
     # PySpark threading contract; .result() re-raises any leg failure.
-    _inherit = inheritable_thread_target(spark)
+    # Without pinned-thread py4j it returns the session itself (there
+    # are no thread-locals to carry) — the bare legs are submitted then.
+    inherit = inheritable_thread_target(spark)
+    legs = [
+        inherit(leg) if callable(inherit) else leg
+        for leg in (_build_bm_top, _build_cos_top)
+    ]
     with ThreadPoolExecutor(max_workers=2) as pool:
-        bm_f = pool.submit(_inherit(_build_bm_top))
-        cos_f = pool.submit(_inherit(_build_cos_top))
+        bm_f, cos_f = [pool.submit(leg) for leg in legs]
         bm_top, cos_top = bm_f.result(), cos_f.result()
     bm_rank = _join_rank(bm_top, "score", "doc_id")
     cos_rank = _join_rank(cos_top, "cos", "doc_id")

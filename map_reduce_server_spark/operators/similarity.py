@@ -971,11 +971,11 @@ def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RANGE_THETA = 0.25  # cosine threshold for range search
 
-# Oracle for the UNREGISTERED ann_range_search below (round-16
-# registration queue): identical cosine twin, threshold filter
-# instead of a rank cut (no k to tie-break — the predicate itself is
-# deterministic; round(…, 6) only on the EMITTED value, never in
-# the filter, so both engines filter the same raw double).
+# Oracle for ann_range_search below: identical cosine twin,
+# threshold filter instead of a rank cut (no k to tie-break — the
+# predicate itself is deterministic; round(…, 6) only on the EMITTED
+# value, never in the filter, so both engines filter the same raw
+# double).
 _RANGE_SEARCH_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 q AS (SELECT vec_id AS query_id, vec AS qvec FROM e
@@ -988,6 +988,7 @@ WHERE vec_id <> query_id
 """
 
 
+@register("ann_range_search", oracle=_RANGE_SEARCH_ORACLE)
 def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold (range) similarity search: ALL corpus vectors with
     cosine >= theta per query — the complement of top-k retrieval

@@ -960,15 +960,14 @@ def q_ts_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED q_weighted_median below (round-17
-# registration queue). The lower weighted median is a DATA VALUE
-# (the first price whose cumulative weight reaches half the total),
-# not an interpolated quantile — percentile()/quantile_cont()
-# interpolate differently across engines (pinned in
-# tests/test_engine_portability_pins.py) while "first value where
-# 2*cum >= tot" is bit-exact on both. Weights aggregate per
-# (group, value) first, so the running sum's ORDER BY price is
-# unique within each group and the cumulative prefix is
+# Oracle for q_weighted_median below. The lower weighted median is a
+# DATA VALUE (the first price whose cumulative weight reaches half
+# the total), not an interpolated quantile —
+# percentile()/quantile_cont() interpolate differently across
+# engines (pinned in tests/test_engine_portability_pins.py) while
+# "first value where 2*cum >= tot" is bit-exact on both. Weights
+# aggregate per (group, value) first, so the running sum's ORDER BY
+# price is unique within each group and the cumulative prefix is
 # engine-independent; all weight arithmetic is exact decimal.
 _WMEDIAN_ORACLE = """
 WITH g AS (
@@ -988,6 +987,7 @@ FROM c GROUP BY flag
 """
 
 
+@register("q_weighted_median", oracle=_WMEDIAN_ORACLE)
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact weighted median per group: the smallest
     ``l_extendedprice`` whose cumulative ``l_quantity`` weight
@@ -1005,10 +1005,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the prefix is partitioning-invariant). No
     global sort, no interpolation: the median is selected by a
     filtered MIN, and every weight is an exact decimal sum. At 100
-    TB the distinct-value table per group is what it is — if values
-    are near-unique, swap in the rank-based k-th-element selection
-    of q_winsorize_extremes (same discipline, no interpolation
-    either).
+    TB the distinct-value table per group is what it is.
     """
     li = load_table(spark, sf_dir, "lineitem")
     g = li.groupBy(

@@ -1338,10 +1338,9 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COLLOC_MIN_COUNT = 5
 
-# Oracle for the UNREGISTERED text_collocations below (round-14
-# registration queue). All marginals derive from the ONE bigram
-# count table, so the oracle replays the same single-heavy-shuffle
-# factorization the engine plans.
+# Oracle for text_collocations below. All marginals derive from the
+# ONE bigram count table, so the oracle replays the same
+# single-heavy-shuffle factorization the engine plans.
 _COLLOC_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, {SQL_TOKS} AS ts FROM documents),
@@ -1497,11 +1496,10 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CHUNK_W = 32  # tokens per chunk
 _CHUNK_S = 24  # stride (8-token overlap between neighbors)
 
-# Oracle for the UNREGISTERED text_chunk_windows below (round-16
-# registration queue): identical window arithmetic over the shared
-# tokenizer; list_slice is 1-based INCLUSIVE on both bounds, Spark's
-# slice(arr, start, length) is 1-based with a length — both render
-# the same [i*S, i*S + W) token window.
+# Oracle for text_chunk_windows below: identical window arithmetic
+# over the shared tokenizer; list_slice is 1-based INCLUSIVE on both
+# bounds, Spark's slice(arr, start, length) is 1-based with a length
+# — both render the same [i*S, i*S + W) token window.
 _CHUNK_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, {_SQL_NE_TOKENS} AS toks,
@@ -1523,6 +1521,7 @@ FROM ch
 """
 
 
+@register("text_chunk_windows", oracle=_CHUNK_ORACLE)
 def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG-prep chunking: split every document into overlapping
     fixed-size token windows (W=32, stride 24) with doc provenance

@@ -225,10 +225,9 @@ _rbv(__name__)
 del _rbv  # a lingering ref would pickle the functions pkg by reference
 
 
-# Oracle for the UNREGISTERED q_skew_join_hint below (round-17
-# registration queue): the crafted hot key routes ~2/3 of lineitem
-# onto k = 1, and the result is the PLAIN join aggregate — skew
-# handling must be result-invisible by construction.
+# Oracle for q_skew_join_hint below: the crafted hot key routes ~2/3
+# of lineitem onto k = 1, and the result is the PLAIN join aggregate
+# — skew handling must be result-invisible by construction.
 _SKEW_ORACLE = f"""
 WITH f AS (
   SELECT CASE WHEN l_orderkey % 3 = 0 THEN l_partkey % 50 + 1
@@ -243,6 +242,7 @@ GROUP BY p_brand
 """
 
 
+@register("q_skew_join_hint", oracle=_SKEW_ORACLE)
 def q_skew_join_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AQE-skew-eligible join under extreme key skew: a skewed fact
     table (crafted key routing ~2/3 of lineitem to one hot value) is

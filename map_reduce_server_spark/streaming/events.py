@@ -664,9 +664,9 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle for the UNREGISTERED stream_cdc_latest below (round-16
-# registration queue): identical to q_cdc_apply's batch replay — the
-# streaming state converges to the same latest-op-wins snapshot.
+# Oracle for stream_cdc_latest below: identical to q_cdc_apply's
+# batch replay — the streaming state converges to the same
+# latest-op-wins snapshot.
 _STREAM_CDC_ORACLE = """
 WITH changelog AS (
   SELECT o_custkey AS key, o_orderdate AS ts, o_orderkey AS seq,
@@ -688,6 +688,7 @@ WHERE l.op <> 'D'
 """
 
 
+@register("stream_cdc_latest", oracle=_STREAM_CDC_ORACLE)
 def stream_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CDC apply: the orders changelog replayed as
     commit-ordered micro-batches with per-key latest-op-wins state —

@@ -176,10 +176,9 @@ def stream_stream_interval_join(
     return _collect_result(spark, out, stage, joined.schema)
 
 
-# Oracle for the UNREGISTERED stream_stream_left_outer below
-# (round-17 registration queue): the final append output of a
-# watermark-flushed streaming LEFT OUTER join on bounded input IS
-# the batch left join — matched rows stream out like the inner
+# Oracle for stream_stream_left_outer below: the final append output
+# of a watermark-flushed streaming LEFT OUTER join on bounded input
+# IS the batch left join — matched rows stream out like the inner
 # join; unmatched clicks null-extend once the watermark proves no
 # purchase can arrive anymore.
 _STREAM_LEFT_OUTER_ORACLE = """
@@ -198,6 +197,7 @@ LEFT JOIN (SELECT * FROM events
 """
 
 
+@register("stream_stream_left_outer", oracle=_STREAM_LEFT_OUTER_ORACLE)
 def stream_stream_left_outer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -289,11 +289,10 @@ def stream_stream_left_outer(
     ).drop("click_ts")
 
 
-# Oracle for the UNREGISTERED stream_stream_full_outer below
-# (round-18 registration queue): the final append output of a
-# watermark-flushed streaming FULL OUTER join on bounded input IS
-# the batch full join — matched pairs stream out; unmatched rows on
-# EITHER side null-extend once their state expires.
+# Oracle for stream_stream_full_outer below: the final append output
+# of a watermark-flushed streaming FULL OUTER join on bounded input
+# IS the batch full join — matched pairs stream out; unmatched rows
+# on EITHER side null-extend once their state expires.
 _STREAM_FULL_OUTER_ORACLE = """
 SELECT a.event_id AS click_id, b.event_id AS purchase_id,
        COALESCE(a.user_id, b.user_id) AS user_id,
@@ -310,6 +309,7 @@ FULL JOIN (SELECT * FROM events
 """
 
 
+@register("stream_stream_full_outer", oracle=_STREAM_FULL_OUTER_ORACLE)
 def stream_stream_full_outer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

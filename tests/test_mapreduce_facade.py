@@ -719,3 +719,38 @@ def test_pipe_partition_early_exit_consumer():
     run = _pipe_partition(["head", "-2"])
     got = list(run(iter([f"line{i}" for i in range(100000)])))
     assert got == [b"line0", b"line1"]
+
+
+_FOREIGN_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+import __spark_entry__ as entry
+from tests.oracle_utils import compare_to_oracle
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+df = entry.queries()["mr_wordcount"](spark, sys.argv[2])
+ok, msg = compare_to_oracle(df, entry.oracle_sql()["mr_wordcount"], sys.argv[2])
+print("PARITY", ok, msg)
+"""
+
+
+def test_mr_wordcount_from_foreign_cwd(sf_small):
+    """The driver contract from another working directory, with a
+    vanilla session: only the driver has the repo on sys.path, so the
+    façade's map/group/reduce closures must reach the Python workers
+    by value (a by-reference pickle raises ModuleNotFoundError
+    there)."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT, repo, sf_small],
+        cwd="/tmp",
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "PARITY True ok" in proc.stdout, proc.stderr[-3000:]

@@ -25,10 +25,37 @@ def test_query_matches_oracle(spark, sf_small, name):
 
 
 def test_every_query_runs(spark, sf_small):
-    """Queries without oracles still must run and return a schema."""
+    """Queries without oracles still must run and return a schema
+    (the ones with an oracle run in test_query_matches_oracle)."""
     for name, fn in registry.all_queries().items():
+        if name in registry.ORACLE:
+            continue
         df = fn(spark, sf_small)
         assert df.columns, f"{name} returned no columns"
+
+
+def test_every_oracle_constant_is_registered():
+    """No parked operators: every module-level ``*_ORACLE`` string in
+    ``operators/`` and ``streaming/`` is some registered query's oracle
+    (compared in the registry's whitespace-collapsed storage form)."""
+    import importlib
+    import pkgutil
+
+    from map_reduce_server_spark import operators, streaming
+
+    registered = set(registry.ORACLE.values())
+    parked = []
+    for pkg in (operators, streaming):
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            parked += [
+                f"{info.name}.{attr}"
+                for attr, value in vars(mod).items()
+                if attr.endswith("_ORACLE")
+                and isinstance(value, str)
+                and " ".join(value.split()) not in registered
+            ]
+    assert not parked, parked
 
 
 def test_entry_smoke(spark):

@@ -299,9 +299,7 @@ _GLOBAL_WINDOW_ALLOWLIST = {
     # |alphabet|^2 regardless of corpus size
     "text_bpe_train",
     # running sum over the per-day rollup — days-cardinality input
-    # regardless of corpus size (documented in the docstring); entry
-    # added at staging time so the round-18 registration cannot trip
-    # the lint by surprise
+    # regardless of corpus size (documented in the docstring)
     "q_cumulative_distinct_users",
 }
 
@@ -506,7 +504,7 @@ def test_inverted_index_no_raw_token_shuffle(spark, sf_small):
 
 
 def test_jaccard_neighbors_wedge_is_equi_join(spark, sf_small):
-    """The staged graph_jaccard_neighbors must enumerate wedges via
+    """graph_jaccard_neighbors must enumerate wedges via
     an equi-join on the shared endpoint — never a cartesian / nested
     loop over node pairs."""
     from map_reduce_server_spark.operators.clustering import (
@@ -519,7 +517,7 @@ def test_jaccard_neighbors_wedge_is_equi_join(spark, sf_small):
 
 
 def test_chunk_windows_has_no_exchange(spark, sf_small):
-    """The staged text_chunk_windows is per-document: its plan must
+    """text_chunk_windows is per-document: its plan must
     contain no shuffle exchange at all (the chunk-index explode is
     narrow) and no Python row evaluation."""
     from map_reduce_server_spark.operators.text import text_chunk_windows

@@ -45,6 +45,14 @@ EXAMPLES = os.path.join(
     "examples",
 )
 
+# The goldens are the reference project's own files, read in place;
+# a checkout without that tree cannot run these tests, and the
+# fixtures cannot be recreated here without copying them.
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF),
+    reason=f"reference golden tree {REF} is not present",
+)
+
 
 @pytest.fixture(scope="module")
 def ref_input(tmp_path_factory):

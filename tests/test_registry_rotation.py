@@ -1,136 +1,133 @@
-"""Rotation-bookkeeping lint: the registry must always carry a
-``_DRIVER_GREEN_R{N}`` frozenset for the LATEST driver correctness
-round, equal to that round's green rows.
+"""The driver-rotation order is derived from the CORRECTNESS_r*.json
+files, never kept by hand.
 
-Why this test exists: the stale-first ordering in
-``registry._stale_first`` only advances if each round's green set is
-recorded as a constant. Forgetting it cost a verdict item in rounds
-6, 7, 8, and 9 — the next driver window would silently re-check ~46
-just-certified queries instead of the stalest ones. This test makes
-the omission a local pytest failure instead of a judge finding.
+The driver verifies a ~50-query prefix of ``all_queries()`` each
+round, so the registry orders itself stalest-first: queries with no
+green row certifying the current code, then the rest by the round of
+their freshest green row, oldest first. These tests pin that
+derivation against the real files and against synthetic ones in a
+temporary directory.
 
 No Spark session needed — pure JSON + module attributes.
 """
 
 from __future__ import annotations
 
-import glob
 import json
-import os
 import re
+from pathlib import Path
 
 from map_reduce_server_spark import registry
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REPO = Path(__file__).resolve().parents[1]
 
 
-def _green_names(path: str) -> frozenset[str]:
-    """Names whose driver row fully certifies the query: rows and
-    schema matched, no error, and the value hash matched (or the
-    query is a documented rows-only check, recorded as null)."""
-    with open(path) as f:
-        rows = json.load(f)
-    return frozenset(
+def _row(**over) -> dict:
+    """A green driver row, with any field overridden."""
+    row = {"rows_match": True, "schema_match": True, "hash_match": True,
+           "err": None}
+    row.update(over)
+    return row
+
+
+def _write_round(root: Path, n: int, rows: dict) -> None:
+    (root / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(rows))
+
+
+def _order(root: Path, names: list[str]) -> list[str]:
+    return list(registry._stale_first(dict.fromkeys(names), root))
+
+
+def test_latest_round_greens_are_the_tail():
+    """The freshest driver round's greens occupy a contiguous tail of
+    ``all_queries()`` — the next window goes to staler queries."""
+    rounds = {
+        int(m.group(1)): p
+        for p in REPO.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    }
+    assert rounds, "no CORRECTNESS_r*.json next to the package"
+    n = max(rounds)
+    greens = {
         name
-        for name, r in rows.items()
-        if r.get("rows_match")
-        and r.get("schema_match")
-        and not r.get("err")
-        and r.get("hash_match") in (True, None)
-    )
-
-
-def _latest_round() -> tuple[int, frozenset[str]]:
-    best_n, best_greens = -1, frozenset()
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        n = int(m.group(1))
-        greens = _green_names(path)
-        if greens and n > best_n:
-            best_n, best_greens = n, greens
-    return best_n, best_greens
-
-
-def test_latest_round_has_green_constant():
-    n, greens = _latest_round()
-    assert n >= 2, "no CORRECTNESS_r*.json with green rows found"
-    const = getattr(registry, f"_DRIVER_GREEN_R{n}", None)
-    assert const is not None, (
-        f"CORRECTNESS_r{n:02d}.json exists with {len(greens)} green rows "
-        f"but registry.py has no _DRIVER_GREEN_R{n} frozenset — without "
-        "it the next driver window re-checks just-certified queries "
-        "instead of the stalest ones. Add the constant and thread it "
-        "through _EVER_GREEN and _stale_first."
-    )
-    assert const == greens, (
-        f"_DRIVER_GREEN_R{n} does not match CORRECTNESS_r{n:02d}.json's "
-        f"green rows: missing={sorted(greens - const)}, "
-        f"extra={sorted(const - greens)}"
-    )
-
-
-def test_latest_green_constant_is_threaded_through_rotation():
-    """The constant must actually participate in the ordering: every
-    name in it must sort AFTER any name whose freshest green row is
-    older (unless re-marked changed), i.e. the latest greens occupy
-    the registry tail, not the driver window."""
-    n, greens = _latest_round()
-    changed = getattr(registry, f"_CHANGED_R{n + 1}", frozenset())
-    effective = greens - changed
+        for name, r in json.loads(rounds[n].read_text()).items()
+        if r["rows_match"] and r["schema_match"] and not r["err"]
+        and r["hash_match"] is not False
+        and registry.RECERTIFY.get(name, 0) <= n
+    }
     order = list(registry.all_queries())
-    positions = {name: i for i, name in enumerate(order)}
-    tail = sorted(positions[name] for name in effective if name in positions)
-    # The freshest greens must be a contiguous tail of the ordering.
-    expected_tail = list(range(len(order) - len(tail), len(order)))
-    assert tail == expected_tail, (
-        f"_DRIVER_GREEN_R{n} names are not ordered last by "
-        "_stale_first — the constant exists but is not threaded "
-        "through _EVER_GREEN/_stale_first"
-    )
+    tail = sorted(order.index(name) for name in greens if name in order)
+    assert tail
+    assert tail == list(range(len(order) - len(tail), len(order)))
 
 
-def test_changed_constant_exists_for_current_round():
-    """Reworks in the round under construction must have a
-    _CHANGED_R{N+1} home so a result-changing edit can be recorded
-    the moment it lands."""
-    n, _ = _latest_round()
-    assert hasattr(registry, f"_CHANGED_R{n + 1}"), (
-        f"registry.py must define _CHANGED_R{n + 1} (frozenset, may be "
-        "empty) so round-{0} reworks rejoin the never-verified head".format(
-            n + 1
-        )
-    )
+def test_order_ignores_working_directory(tmp_path, monkeypatch):
+    """The files are read next to the package, not from the cwd."""
+    before = list(registry.all_queries())
+    monkeypatch.chdir(tmp_path)
+    assert list(registry.all_queries()) == before
 
 
-def test_changed_name_recertified_by_later_round_counts_green(monkeypatch):
-    """Review r10: the old `- (_CHANGED_RN - _DRIVER_GREEN_RN)` form
-    credited only round N's own re-certification — a name changed in
-    round N but certified by a LATER round stayed pinned to the
-    never-verified head forever. _ever_green must credit any green
-    round at-or-after the change."""
-    # 'text_bm25' is green in r5 and r9. Changed in r8, not in r8's
-    # greens, but r9 re-certified it → must be ever-green.
-    monkeypatch.setitem(registry._CHANGED_BY_ROUND, 8, frozenset({"text_bm25"}))
-    assert "text_bm25" in registry._ever_green()
+def test_never_green_first_then_oldest_round_first(tmp_path):
+    _write_round(tmp_path, 2, {"c_r2": _row(), "d_r2_r3": _row()})
+    _write_round(tmp_path, 3, {"a_r3": _row(), "d_r2_r3": _row()})
+    order = _order(tmp_path, ["a_r3", "b_new", "c_r2", "d_r2_r3"])
+    # d's freshest row is round 3; ties keep registration order
+    assert order == ["b_new", "c_r2", "a_r3", "d_r2_r3"]
 
 
-def test_changed_name_never_recertified_stays_head(monkeypatch):
-    """A changed name no later round certified must NOT count green
-    (its only green rows predate the change)."""
-    # 'mr_wordcount' is green through r11 only (not r12..r15); mark
-    # it changed in r12. (Fixture rotates when the driver re-certifies
-    # it: r13 swapped q_sliding_window → q18_large_orders, r14 swapped
-    # q18_large_orders → dedup_cluster, r16 swapped dedup_cluster →
-    # mr_wordcount after r15 re-certified dedup_cluster.)
-    monkeypatch.setitem(
-        registry._CHANGED_BY_ROUND, 12, frozenset({"mr_wordcount"})
-    )
-    eg = registry._ever_green()
-    assert "mr_wordcount" not in eg
-    # _stale_first reads the module-level cache — refresh it for the
-    # simulated scenario, restored by monkeypatch afterwards
-    monkeypatch.setattr(registry, "_EVER_GREEN", eg)
-    order = list(registry._stale_first(dict.fromkeys(eg | {"mr_wordcount"})))
-    assert order[0] == "mr_wordcount"
+def test_failed_rows_are_not_green(tmp_path):
+    _write_round(tmp_path, 2, {
+        "green": _row(),
+        "rows_only": _row(hash_match=None),
+        "err": _row(err="Py4JJavaError"),
+        "hash_mismatch": _row(hash_match=False),
+        "rows_mismatch": _row(rows_match=False),
+        "schema_mismatch": _row(schema_match=False),
+    })
+    order = _order(tmp_path, [
+        "green", "rows_only", "err", "hash_mismatch", "rows_mismatch",
+        "schema_mismatch",
+    ])
+    assert order == [
+        "err", "hash_mismatch", "rows_mismatch", "schema_mismatch",
+        "green", "rows_only",
+    ]
+
+
+def test_changed_name_recertified_by_later_round_counts_green(
+    tmp_path, monkeypatch
+):
+    """A RECERTIFY name counts green again once a round at or after
+    its number certifies it — an entry expires on its own."""
+    monkeypatch.setattr(registry, "RECERTIFY", {"changed": 3})
+    _write_round(tmp_path, 2, {"changed": _row(), "old": _row()})
+    _write_round(tmp_path, 3, {"changed": _row(), "fresh": _row()})
+    order = _order(tmp_path, ["changed", "fresh", "old"])
+    assert order == ["old", "changed", "fresh"]
+
+
+def test_changed_name_never_recertified_stays_head(tmp_path, monkeypatch):
+    """A RECERTIFY name whose green rows all predate its number stays
+    at the head, however recent those rows are."""
+    monkeypatch.setattr(registry, "RECERTIFY", {"changed": 4})
+    _write_round(tmp_path, 2, {"old": _row()})
+    _write_round(tmp_path, 3, {"changed": _row(), "fresh": _row()})
+    order = _order(tmp_path, ["old", "fresh", "changed"])
+    assert order == ["changed", "old", "fresh"]
+
+
+def test_new_round_file_moves_order(tmp_path):
+    """A new driver round reorders the registry with no code edit."""
+    names = ["a", "b", "c"]
+    _write_round(tmp_path, 2, {"a": _row(), "b": _row()})
+    _write_round(tmp_path, 3, {"c": _row()})
+    assert _order(tmp_path, names) == ["a", "b", "c"]
+    _write_round(tmp_path, 17, {"a": _row()})
+    assert _order(tmp_path, names) == ["b", "c", "a"]
+
+
+def test_no_files_means_registration_order(tmp_path):
+    registry.load_all()
+    order = list(registry._stale_first(registry.QUERIES, tmp_path))
+    assert order == list(registry.QUERIES)

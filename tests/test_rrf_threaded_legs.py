@@ -61,3 +61,13 @@ def test_rrf_leg_failure_propagates(spark, sf_medium, monkeypatch):
     monkeypatch.setattr(retrieval, "_bm25_scored", _boom)
     with pytest.raises(RuntimeError, match="leg build failed"):
         retrieval.q_hybrid_retrieval_rrf(spark, sf_medium)
+
+
+def test_rrf_without_pinned_thread_py4j(spark, sf_medium, monkeypatch):
+    """Without pinned-thread py4j, ``inheritable_thread_target(spark)``
+    returns the session itself, not a wrapper; the legs must then be
+    submitted bare and the result must not change."""
+    threaded = _rows(retrieval.q_hybrid_retrieval_rrf(spark, sf_medium))
+    monkeypatch.setattr(retrieval, "inheritable_thread_target", lambda s: s)
+    unpinned = _rows(retrieval.q_hybrid_retrieval_rrf(spark, sf_medium))
+    assert unpinned == threaded

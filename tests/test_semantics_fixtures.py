@@ -844,10 +844,9 @@ def test_rollup_multi_distinct_matches_oracle(spark, sf_small):
 
 
 def test_asof_join_forward_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the registered forward as-of query
-    (round-13 registration queue, same holdback as
-    q_rollup_multi_distinct): the MIN-over-following-range rendering
-    must match DuckDB's native forward ASOF JOIN."""
+    """Gate-grade parity for the registered forward as-of query: the
+    MIN-over-following-range rendering must match DuckDB's native
+    forward ASOF JOIN."""
     from map_reduce_server_spark.operators.advanced import (
         _ASOF_FWD_ORACLE,
         q_asof_join_forward,
@@ -1106,20 +1105,17 @@ def test_bitmap_distinct_words_merge_losslessly(spark, sf_small):
 
 
 def test_chunk_windows_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED text_chunk_windows
-    (round-16 registration queue): overlapping token windows with
-    identical boundary arithmetic on both engines."""
+    """Chunk invariants of text_chunk_windows (oracle parity runs
+    in test_query_matches_oracle): contiguous chunk indices from
+    0, full windows except the tail, and stride coverage of every
+    token."""
     from map_reduce_server_spark.operators.text import (
-        _CHUNK_ORACLE,
         _CHUNK_S,
         _CHUNK_W,
         text_chunk_windows,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = text_chunk_windows(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _CHUNK_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert rows
     by_doc: dict[int, list] = {}
@@ -1141,18 +1137,13 @@ def test_chunk_windows_matches_oracle(spark, sf_small):
 
 
 def test_graph_jaccard_neighbors_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED graph_jaccard_neighbors
-    (round-16 registration queue): wedge-enumerated common-neighbor
-    Jaccard with degree-derived union sizes."""
+    """graph_jaccard_neighbors emits each unordered pair once
+    (part_a < part_b) with a Jaccard score in (0, 1]."""
     from map_reduce_server_spark.operators.clustering import (
-        _JACC_NEIGHBORS_ORACLE,
         graph_jaccard_neighbors,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = graph_jaccard_neighbors(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _JACC_NEIGHBORS_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert rows
     for r in rows:
@@ -1161,19 +1152,14 @@ def test_graph_jaccard_neighbors_matches_oracle(spark, sf_small):
 
 
 def test_hll_sketch_rollup_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_hll_sketch_rollup
-    (round-16 registration queue): per-nation DataSketches HLL
-    sketches unioned to region level must estimate within 3 sigma of
-    the exact counts (the boolean the oracle asserts literally)."""
+    """q_hll_sketch_rollup: one row per region, every per-nation
+    sketch union estimating within 3 sigma of the exact count (the
+    boolean the oracle asserts literally)."""
     from map_reduce_server_spark.operators.advanced import (
-        _HLL_ROLLUP_ORACLE,
         q_hll_sketch_rollup,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = q_hll_sketch_rollup(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _HLL_ROLLUP_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert len(rows) == 5  # one row per region
     assert all(r.est_within_3rsd for r in rows)
@@ -1218,42 +1204,15 @@ def test_hll_sketch_union_equals_direct_sketch(spark, sf_small):
     assert direct == merged
 
 
-def test_winsorize_extremes_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_winsorize_extremes
-    (round-16 registration queue): rank-based [p1, p99] cutoffs and
-    the exact clipped sum."""
-    from map_reduce_server_spark.operators.curation import (
-        _WINSORIZE_ORACLE,
-        q_winsorize_extremes,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_winsorize_extremes(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _WINSORIZE_ORACLE, sf_small)
-    assert ok, msg
-    r = df.collect()[0]
-    assert r.cut_low < r.cut_high
-    # ~1% clipped each side, and the winsorized sum is bounded by
-    # the cutoffs times the row count
-    assert 0 < r.n_clipped_low <= r.n_rows * 0.011
-    assert 0 < r.n_clipped_high <= r.n_rows * 0.011
-    assert r.cut_low * r.n_rows <= r.winsorized_sum <= r.cut_high * r.n_rows
-
-
 def test_ann_range_search_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED ann_range_search
-    (round-16 registration queue): the threshold filter must compare
-    the raw double and agree exactly with DuckDB's."""
+    """ann_range_search returns only neighbors at or above the
+    threshold, and never the query vector itself."""
     from map_reduce_server_spark.operators.similarity import (
-        _RANGE_SEARCH_ORACLE,
         _RANGE_THETA,
         ann_range_search,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = ann_range_search(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _RANGE_SEARCH_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert rows
     assert all(r.cos_sim >= _RANGE_THETA - 1e-6 for r in rows)
@@ -1261,18 +1220,13 @@ def test_ann_range_search_matches_oracle(spark, sf_small):
 
 
 def test_weighted_median_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_weighted_median
-    (round-17 registration queue): the filtered-MIN selection must
-    land on DuckDB's first-crossing value exactly."""
+    """q_weighted_median yields a median and a positive total
+    weight for each return flag."""
     from map_reduce_server_spark.operators.stats import (
-        _WMEDIAN_ORACLE,
         q_weighted_median,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = q_weighted_median(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _WMEDIAN_ORACLE, sf_small)
-    assert ok, msg
     rows = {r.l_returnflag: r for r in df.collect()}
     assert set(rows) == {"A", "N", "R"}
     # the median is a data value inside the group's range, and at
@@ -1313,19 +1267,14 @@ def test_weighted_median_is_weight_midpoint(spark, sf_small):
 
 
 def test_merge_intervals_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_merge_intervals
-    (round-17 registration queue): the running-max island cut must
-    agree with DuckDB under duplicate timestamps and contained
-    intervals."""
+    """q_merge_intervals: every merged span covers at least one
+    300 s interval, and coverage is bounded by span count times
+    the longest span."""
     from map_reduce_server_spark.operators.advanced import (
-        _MERGE_IV_ORACLE,
         q_merge_intervals,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = q_merge_intervals(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _MERGE_IV_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert rows
     # every merged span is at least one interval long (300 s) and
@@ -1395,19 +1344,14 @@ def test_merge_intervals_contained_interval_fixture(spark):
 
 
 def test_reservoir_sample_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_reservoir_sample
-    (round-17 registration queue): bottom-k md5-uniform keys per
-    source, bit-identical ranks on both engines."""
+    """q_reservoir_sample keeps at most k distinct documents per
+    source."""
     from map_reduce_server_spark.operators.curation import (
         _RSV_K,
-        _RESERVOIR_ORACLE,
         q_reservoir_sample,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = q_reservoir_sample(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _RESERVOIR_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert rows
     per_src = {}
@@ -1446,36 +1390,14 @@ def test_reservoir_sample_is_mergeable(spark, sf_small):
     assert direct == merged
 
 
-def test_skew_join_hint_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_skew_join_hint
-    (round-17 registration queue): the staged skewed fact joined
-    under the MERGE hint must equal the plain-join aggregate —
-    skew handling is result-invisible by construction."""
-    from map_reduce_server_spark.operators.udf import (
-        _SKEW_ORACLE,
-        q_skew_join_hint,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_skew_join_hint(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _SKEW_ORACLE, sf_small)
-    assert ok, msg
-
-
 def test_shortest_paths_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED graph_shortest_paths
-    (round-17 registration queue): the min-parent-tree paths must
-    equal the oracle's replay of the same tree from its recursive
-    hops CTE."""
+    """graph_shortest_paths: every path lists hops + 1 node ids
+    and ends at its node."""
     from map_reduce_server_spark.operators.clustering import (
-        _SP_ORACLE,
         graph_shortest_paths,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = graph_shortest_paths(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _SP_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert rows
     for r in rows:
@@ -1536,19 +1458,14 @@ def test_shortest_paths_min_parent_replay(spark):
 
 
 def test_cumulative_distinct_users_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED
-    q_cumulative_distinct_users (round-18 registration queue): the
-    first-occurrence prefix sum must equal the expanding-frame
-    distinct count the oracle derives the same way."""
+    """q_cumulative_distinct_users: the cumulative count is the
+    running sum of first arrivals and ends at the total user
+    count."""
     from map_reduce_server_spark.operators.advanced import (
-        _CUMDIST_ORACLE,
         q_cumulative_distinct_users,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = q_cumulative_distinct_users(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _CUMDIST_ORACLE, sf_small)
-    assert ok, msg
     rows = sorted(df.collect(), key=lambda r: r.day_num)
     # the defining identities: cumulative is non-decreasing, equals
     # the running sum of arrivals, and ends at the total user count
@@ -1571,35 +1488,14 @@ def test_cumulative_distinct_users_matches_oracle(spark, sf_small):
     assert rows[-1].cum_users == total
 
 
-def test_incremental_mv_merge_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_incremental_mv_merge
-    (round-18 registration queue): merged base+delta partials must
-    equal the full recompute — the defining property of incremental
-    view maintenance."""
-    from map_reduce_server_spark.operators.advanced import (
-        _MV_MERGE_ORACLE,
-        q_incremental_mv_merge,
-    )
-    from tests.oracle_utils import compare_to_oracle
-
-    df = q_incremental_mv_merge(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _MV_MERGE_ORACLE, sf_small)
-    assert ok, msg
-
-
 def test_sequence_mining_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_sequence_mining
-    (round-18 registration queue): triple support from the path-regex
-    probe must match DuckDB's identical lattice."""
+    """q_sequence_mining obeys the Apriori property: a triple's
+    support never exceeds its prefix pair's."""
     from map_reduce_server_spark.operators.advanced import (
-        _SEQ_MINING_ORACLE,
         q_sequence_mining,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = q_sequence_mining(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _SEQ_MINING_ORACLE, sf_small)
-    assert ok, msg
     rows = {(r.t1, r.t2, r.t3): r.n_users for r in df.collect()}
     assert rows
     # support monotonicity (Apriori property, order-3 -> order-2
@@ -1680,19 +1576,14 @@ def test_sequence_mining_subsequence_fixture(spark):
 
 
 def test_rolling_zscore_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED q_rolling_zscore
-    (round-18 registration queue): decimal-exact rolling sufficient
-    statistics must land on identical z-scores."""
+    """q_rolling_zscore: a population-sigma z-score of a window
+    member is bounded by sqrt(n - 1)."""
     from map_reduce_server_spark.operators.advanced import (
-        _ROLLING_Z_ORACLE,
         _RZ_W,
         q_rolling_zscore,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = q_rolling_zscore(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _ROLLING_Z_ORACLE, sf_small)
-    assert ok, msg
     rows = df.collect()
     assert rows
     # a population-σ z-score of the window's own member is bounded
@@ -1702,20 +1593,14 @@ def test_rolling_zscore_matches_oracle(spark, sf_small):
 
 
 def test_k_core_matches_oracle(spark, sf_small):
-    """Gate-grade parity for the UNREGISTERED graph_k_core (round-18
-    registration queue): iterative peeling must land on the unrolled
-    oracle's fixpoint (monotonicity makes any unroll >= the peel
-    count exact)."""
+    """graph_k_core: every survivor keeps at least k neighbors
+    inside the core."""
     from map_reduce_server_spark.operators.clustering import (
         _KCORE_K,
-        _KCORE_ORACLE,
         graph_k_core,
     )
-    from tests.oracle_utils import compare_to_oracle
 
     df = graph_k_core(spark, sf_small)
-    ok, msg = compare_to_oracle(df, _KCORE_ORACLE, sf_small)
-    assert ok, msg
     # the defining invariant: every survivor keeps >= k neighbors
     # INSIDE the core
     assert all(r.core_degree >= _KCORE_K for r in df.collect())
